@@ -45,6 +45,7 @@ from sed_binning_spark.loaders.channels import (
     read_channel,
     train_frame_schema,
 )
+from sed_binning_spark.loaders.utils import file_id_partitions
 
 MULTI_INDEX = ("trainId", "pulseId", "electronId")
 
@@ -54,7 +55,8 @@ def electron_frames_distributed(
     paths: Sequence[str],
     channels: dict[str, dict],
 ) -> DataFrame:
-    """Per-electron channel extraction with one mapInPandas task per file:
+    """Per-electron channel extraction with exactly one file per
+    mapInPandas task (:func:`file_id_partitions`, no shuffle):
     executors read the bulky hit arrays straight from the raw bytes with
     the built-in HDF5 reader; the driver never materializes event data.
     Shared by the flash and sxp loaders (their channel specs differ only in
@@ -63,23 +65,22 @@ def electron_frames_distributed(
     if not channels:
         raise ValueError("no per_electron channels configured")
     names = list(channels)
+    paths = list(paths)
 
     def _extract(batches):
         from sed_binning_spark.io.hdf5_read import H5File
         from sed_binning_spark.loaders.channels import aligned_array_pdf, read_channel
 
         for pdf in batches:
-            for path in pdf["path"]:
+            for fid in pdf["file_id"]:
+                path = paths[fid]
                 f = H5File(path)
                 chans = {n: read_channel(f, n, channels[n]) for n in names}
                 yield aligned_array_pdf(chans, "per-electron", context=path)
 
-    # round-robin: exactly one file per task (hashing on path leaves ~1/e
-    # of partitions empty and stragglers reading several files)
-    paths_df = spark.createDataFrame(
-        [(p,) for p in paths], "path string",
-    ).repartition(len(paths))
-    return paths_df.mapInPandas(_extract, array_frame_schema(names))
+    return file_id_partitions(spark, len(paths)).mapInPandas(
+        _extract, array_frame_schema(names),
+    )
 
 
 def explode_per_electron(

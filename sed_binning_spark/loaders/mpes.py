@@ -17,8 +17,12 @@ markers, and emits a second evenly-time-spaced "timed" dataframe
   marker array, so the Spark form is one Arrow-batched pandas_udf over
   row_id; no Python loop, no shuffle.
 - **Timed dataframe** (S5): row i samples the stream at event index
-  ``marker[i]-1`` (loader.py:380-393) — a broadcast equi-join of the tiny
-  (i, marker) table against row_id, plus ``timeStamps = start + i/1000``.
+  ``marker[i]-1`` (loader.py:380-393), plus ``timeStamps = start + i/1000``.
+  On the raw-file path it is its own per-file extraction: each task reads
+  its file's markers and streams and emits only the sampled rows (~1 % of
+  the events), so no job joins against or re-extracts the event frame.
+  Injected arrays (``files_data``) take a broadcast equi-join of the tiny
+  (i, marker) table against row_id instead.
 - **Count rate / elapsed time** (A13): pure-NumPy marker derivative and
   ``len(markers)/1000`` (loader.py:440-482), driver-side per-file metadata.
 - **Run-ID resolution** (S3): ``Scan{run:04d}_*`` recursive glob,
@@ -36,10 +40,11 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from sed_binning_spark.loaders.base import BaseLoader
-from sed_binning_spark.loaders.utils import natural_sort_key
+from sed_binning_spark.loaders.utils import file_id_partitions, natural_sort_key
 
 FILE_COLUMN = "file_id"
 ROW_COLUMN = "row_id"
+MS_COLUMN = "ms_id"
 
 _SPARK_TYPES = {"float32": "float", "float64": "double",
                 "int32": "int", "int64": "long"}
@@ -334,9 +339,18 @@ class MpesLoader(BaseLoader):
         """Raw-file read at scale: the DRIVER touches only header pages
         (mmap — stream names, aliases, ms markers, start times), while the
         per-file stream DATA is extracted executor-side with mapInPandas
-        over the path list — one task per file, no driver materialization.
-        This is the 100 TB ingestion shape; the reference's equivalent is
-        its per-file dask.delayed graph (mpes loader.py:114-140).
+        over :func:`file_id_partitions` — exactly one file per task, no
+        exchange, no driver materialization. This is the 100 TB ingestion
+        shape; the reference's equivalent is its per-file dask.delayed
+        graph (mpes loader.py:114-140).
+
+        Both frames are lazy mapInPandas scans of the same source. The
+        event frame decodes every row; the timed frame decodes the same
+        streams but emits only the rows its file's ms markers sample
+        (``stream[marker - 1]``, markers whose target lies outside the
+        file dropped, duplicates kept), so computing it never joins
+        against the event frame. Its columns are ``file_id, ms_id,
+        <streams>[, timeStamps]``; it is None when no file has markers.
         """
         import pandas as pd
 
@@ -400,90 +414,78 @@ class MpesLoader(BaseLoader):
             if mm is not None:
                 elapsed += elapsed_time_from_markers(mm)
 
-        spark = self.spark
-        # round-robin repartition: exactly one file per task. Hashing on
-        # file_id would collide ~1/e of the partitions empty and leave
-        # straggler tasks reading 2-3 files while cores idle.
-        paths_df = spark.createDataFrame(
-            [(i, p) for i, p in enumerate(paths)], "file_id int, path string",
-        ).repartition(len(paths))
-
         np_dtype = data_type
         ts_flag = bool(time_stamps)
         ts_alias = time_stamp_alias
-        starts_by_fid = dict(enumerate(starts))
+        has_markers = [mm is not None for mm in markers]
+
+        def _streams(f, path):
+            # the driver pre-pass validates stream PRESENCE; a truncated
+            # file can still carry streams of unequal length — fail naming
+            # the file, not with pandas' anonymous 'arrays must be same
+            # length'
+            cols = {}
+            n = None
+            for sname, cname in zip(stream_names, out_cols):
+                arr = f.read("/" + sname).astype(np_dtype)
+                if n is not None and len(arr) != n:
+                    raise ValueError(
+                        f"stream {sname!r} in {path} has {len(arr)} rows "
+                        f"but an earlier stream has {n} (truncated file?)",
+                    )
+                cols[cname] = arr
+                n = len(arr)
+            return cols, n
 
         def _extract(batches):
             for pdf in batches:
-                for fid, path in zip(pdf["file_id"], pdf["path"]):
-                    f = H5File(path)
-                    cols = {}
-                    n = None
-                    for sname, cname in zip(stream_names, out_cols):
-                        arr = f.read("/" + sname).astype(np_dtype)
-                        # the driver pre-pass validates stream PRESENCE;
-                        # a truncated file can still carry streams of
-                        # unequal length — fail naming the file, not with
-                        # pandas' anonymous 'arrays must be same length'
-                        if n is not None and len(arr) != n:
-                            raise ValueError(
-                                f"stream {sname!r} in {path} has "
-                                f"{len(arr)} rows but an earlier stream "
-                                f"has {n} (truncated file?)",
-                            )
-                        cols[cname] = arr
-                        n = len(arr)
+                for fid in pdf[FILE_COLUMN]:
+                    f = H5File(paths[fid])
+                    cols, n = _streams(f, paths[fid])
                     out = pd.DataFrame(cols)
                     if ts_flag:
-                        mm = f.read("/msMarkers")
                         out[ts_alias] = event_timestamps_np(
-                            n, mm, starts_by_fid[int(fid)],
+                            n, f.read("/msMarkers"), starts[fid],
                         )
                     out[FILE_COLUMN] = np.int32(fid)
                     out[ROW_COLUMN] = np.arange(n, dtype=np.int64)
                     yield out
 
-        schema = ", ".join(f"`{c}` {_spark_type(np_dtype)}" for c in out_cols)
-        if ts_flag:
-            schema += f", `{ts_alias}` double"
-        schema += f", {FILE_COLUMN} int, {ROW_COLUMN} long"
-        event_df = paths_df.mapInPandas(_extract, schema)
+        def _extract_timed(batches):
+            # row i samples the streams at event index marker[i]-1; markers
+            # whose target falls outside [0, n) have no event to sample and
+            # are dropped, duplicates each keep their row
+            for pdf in batches:
+                for fid in pdf[FILE_COLUMN]:
+                    if not has_markers[fid]:
+                        continue
+                    f = H5File(paths[fid])
+                    cols, n = _streams(f, paths[fid])
+                    target = f.read("/msMarkers").astype(np.int64) - 1
+                    ms_id = np.flatnonzero((target >= 0) & (target < n))
+                    target = target[ms_id]
+                    out = {FILE_COLUMN: np.full(len(ms_id), fid, dtype=np.int32),
+                           MS_COLUMN: ms_id}
+                    for cname, arr in cols.items():
+                        out[cname] = arr[target]
+                    if ts_flag:
+                        out[ts_alias] = starts[fid] + ms_id / 1000.0
+                    yield pd.DataFrame(out)
 
-        # ONE broadcast marker table + ONE join for all files: a per-file
-        # timed_dataframe_from_markers union would re-run the whole
-        # mapInPandas extraction once per file (O(files^2) file reads)
-        marker_rows = []
-        for fid, (mm, start) in enumerate(zip(markers, starts)):
-            if mm is None:
-                continue
-            for i, m in enumerate(np.asarray(mm, dtype=np.int64)):
-                marker_rows.append((fid, int(i), int(m) - 1, start))
+        source = file_id_partitions(self.spark, len(paths))
+        stream_schema = ", ".join(
+            f"`{c}` {_spark_type(np_dtype)}" for c in out_cols
+        )
+        ts_schema = f", `{ts_alias}` double" if ts_flag else ""
+        event_df = source.mapInPandas(
+            _extract,
+            f"{stream_schema}{ts_schema}, {FILE_COLUMN} int, {ROW_COLUMN} long",
+        )
         timed_df = None
-        if marker_rows:
-            mdf = spark.createDataFrame(
-                marker_rows,
-                schema=f"{FILE_COLUMN} int, __ms_i long, __target long, __start double",
-            )
-            keep = [c for c in event_df.columns if c not in (FILE_COLUMN, ROW_COLUMN)]
-            if ts_flag and ts_alias in keep:
-                keep.remove(ts_alias)
-            timed_df = (
-                F.broadcast(mdf)
-                .join(
-                    event_df,
-                    on=(mdf[FILE_COLUMN] == event_df[FILE_COLUMN])
-                    & (mdf["__target"] == event_df[ROW_COLUMN]),
-                    how="inner",
-                )
-                .select(mdf[FILE_COLUMN], F.col("__ms_i"), F.col("__start"), *keep)
-            )
-            if ts_flag:
-                timed_df = timed_df.withColumn(
-                    ts_alias,
-                    F.col("__start") + F.col("__ms_i").cast("double") / F.lit(1000.0),
-                )
-            timed_df = timed_df.drop("__start").withColumnRenamed(
-                "__ms_i", ROW_COLUMN.replace("row", "ms"),
+        if any(mm is not None and len(mm) for mm in markers):
+            timed_df = source.mapInPandas(
+                _extract_timed,
+                f"{FILE_COLUMN} int, {MS_COLUMN} long, {stream_schema}{ts_schema}",
             )
 
         self.metadata.update({

@@ -1,7 +1,8 @@
 """Loader utilities (reference: sed/loader/utils.py).
 
-File discovery with natural sort and slicing (S2), and the bitwise channel
-split used to demux sectorID from TOF steps (M8).
+File discovery with natural sort and slicing (S2), the one-file-per-task
+source of the raw-file extractors, and the bitwise channel split used to
+demux sectorID from TOF steps (M8).
 """
 
 from __future__ import annotations
@@ -53,6 +54,21 @@ def gather_files(
     if f_start is not None and f_end is not None:
         files = files[slice(f_start, f_end, f_step)]
     return files
+
+
+def file_id_partitions(spark, n_files: int) -> DataFrame:
+    """Source for per-file extraction: one ``file_id int`` row per
+    partition, partition i holding exactly ``file_id == i``.
+
+    ``spark.range`` with ``numPartitions == n_files`` slices the ids
+    evenly, so every task reads exactly one file and no exchange runs.
+    A repartitioned path table would add a shuffle stage to every
+    extraction job, and its round-robin start offset skews the deal
+    (measured: 5 files in tasks as [0,0,0,1,4]). Extractors look the path
+    up by ``file_id`` in a list captured in their closure."""
+    return spark.range(n_files, numPartitions=n_files).select(
+        F.col("id").cast("int").alias("file_id"),
+    )
 
 
 def split_channel_bitwise(

@@ -201,3 +201,26 @@ def test_read_dataframe_chunked_row_ids(spark, train_frames):
         keys = list(zip(g.trainId, g.pulseId, g.electronId))
         assert keys == sorted(keys)
         assert list(g.row_id) == sorted(g.row_id) and g.row_id.iloc[0] == 0
+
+
+def test_electron_frames_distributed_reads_each_file_in_its_own_task(spark, tmp_path):
+    """The per-electron extraction shared by flash and sxp reads raw files
+    executor-side, exactly one file per partition, in file order."""
+    from sed_binning_spark.io.hdf5_write import H5Writer
+    from sed_binning_spark.loaders.flash import electron_frames_distributed
+
+    paths = []
+    for i in range(5):
+        w = H5Writer()
+        w.add_dataset("/idx", np.array([10 * i, 10 * i + 1], dtype="<i8"))
+        w.add_dataset("/hits", np.arange(8, dtype="<f8").reshape(2, 4) + i)
+        paths.append(str(tmp_path / f"run_{i}.h5"))
+        w.write(paths[-1])
+    frame = electron_frames_distributed(spark, paths, {
+        "dldPosX": {"format": "per_electron", "index_key": "/idx", "dataset_key": "/hits"},
+    })
+    parts = frame.rdd.glom().collect()
+    assert [[r.trainId for r in p] for p in parts] == [
+        [10 * i, 10 * i + 1] for i in range(5)
+    ]
+    assert list(parts[3][1].dldPosX) == [7.0, 8.0, 9.0, 10.0]

@@ -400,3 +400,32 @@ def test_dhash_pairs_shuffles_band_keys_only(spark):
     assert "MapInPandas" not in plan, plan
     assert "CartesianProduct" not in plan, plan
     assert "NestedLoop" not in plan, plan
+
+
+def test_raw_loader_plans_read_one_file_per_task_without_exchange(spark, tmp_path):
+    """The raw-instrument loaders read straight off the file-id source: the
+    mpes event frame, the mpes timed frame and the flash/sxp per-electron
+    frame are each ONE Python stage over a range scan — no exchange to deal
+    files to tasks, and the timed frame samples the markers itself instead
+    of joining against the event frame."""
+    from sed_binning_spark.io.hdf5_write import H5Writer
+    from sed_binning_spark.loaders.flash import electron_frames_distributed
+    from sed_binning_spark.loaders.mpes import MpesLoader
+
+    paths = []
+    for i in range(3):
+        w = H5Writer()
+        w.add_dataset("/Stream_0", np.arange(10, dtype=np.float32))
+        w.add_dataset("/msMarkers", np.array([2, 5], dtype=np.int64))
+        paths.append(str(tmp_path / f"Scan0001_{i}.h5"))
+        w.write(paths[-1])
+    ev, timed, _ = MpesLoader(spark).read_dataframe(files=paths, time_stamps=True)
+    electron = electron_frames_distributed(
+        spark, paths, {"dldPosX": {"format": "per_electron"}},
+    )
+    for df in (ev, timed, electron):
+        plan = plan_of(df)
+        assert plan.count("MapInPandas") == 1, plan
+        assert "Range" in plan, plan
+        assert "Exchange" not in plan, plan
+        assert "BroadcastHashJoin" not in plan, plan

@@ -22,33 +22,19 @@ docs.count()
 
 import sed_binning_spark.pipeline.dedup as D
 
-orig_src = None
 
-
-def run(label):
+def run():
     t0 = time.perf_counter()
     dedup_substrings(docs, window=5, hash_function="rolling") \
         .agg(F.sum("n_removed_tokens")).collect()
     return time.perf_counter() - t0
 
 
-# build the "inline" variant by patching the module function that binds
-# __kept: easiest faithful re-creation is textual — wrap withColumn to
-# intercept the __kept binding and substitute direct references.
-_real_with_output = D._with_output_columns
-
-
-def patched_with_output(cols, outputs):
-    return _real_with_output(cols, outputs)
-
-
-# Simpler, honest toggle: flip a module flag the rebuild reads.
-print("this harness relies on D._INLINE_KEPT support", flush=True)
 results = {"temp": [], "inline": []}
 for rep in range(5):
     for mode in ("temp", "inline"):
         D._INLINE_KEPT = mode == "inline"
-        results[mode].append(round(run(mode), 3))
+        results[mode].append(round(run(), 3))
         print(f"rep{rep} {mode}: {results[mode][-1]}", flush=True)
 for mode, runs in results.items():
     print(f"# {mode}: min={min(runs)} runs={runs}", flush=True)
